@@ -51,6 +51,16 @@ def test_object_needs_table_or_sql():
     assert errors2 == []
 
 
+def test_batch_cap_below_one_is_a_startup_error():
+    for cap in (0, -5):
+        errors, _ = validate_environment(_env(max_records_per_batch=cap))
+        assert any(
+            f"max_records_per_batch must be at least 1, got {cap}" in e
+            for e in errors
+        )
+    assert validate_environment(_env(max_records_per_batch=1)) == ([], [])
+
+
 def test_polling_interval_warnings():
     _, w_fast = validate_environment(_env(polling_interval_seconds=2))
     assert any("< 5s" in w for w in w_fast)

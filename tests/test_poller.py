@@ -2,6 +2,7 @@
 per-destination failure independence, DLQ capture, replay routing."""
 
 import json
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -363,3 +364,64 @@ def test_full_sync_routes_to_distributed_when_available(rig, spark, tmp_path):
     [r2] = p.run_cycle()
     assert r2.mode == "sync" and r2.exported_rows == 4
     assert len(rig.sink.payloads) == 1
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (spark jobs, fn())."""
+    sc = spark.sparkContext
+    group = f"test-poller-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_envelope_poll_is_one_action(rig, spark):
+    """The envelope path runs only the ordered chunk iteration: no
+    separate (watermark, count) aggregate before it."""
+    from trignis_spark.streaming.structured import make_export_batch_fn
+
+    p = rig.pipeline()
+    p.run_cycle()  # full sync
+    rig.rows += outbox_rows(5, start=11)
+    busy, [r] = _count_jobs(spark, p.run_cycle)
+    assert r.mode == "sync" and r.exported_rows == 5
+    assert busy <= 3
+    empty, [r2] = _count_jobs(spark, p.run_cycle)
+    assert r2.mode == "empty" and empty <= 2
+
+    body = make_export_batch_fn(
+        rig.env, rig.env.tracking_objects[0], [rig.sink], rig.state, rig.dlq,
+        retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
+    )
+    epoch = make_outbox(spark, outbox_rows(5, start=16))
+    foreach, _ = _count_jobs(spark, lambda: body(epoch, 0))
+    assert foreach <= busy
+    assert rig.state.get_last_version("e1", "obj") == 20
+
+
+def test_distributed_path_manifest_bounds_on_diff(rig):
+    """With df_sinks configured the (watermark, count) aggregate still
+    runs first: a failed distributed write dead-letters the exact
+    version range and row count of the incremental batch."""
+    from trignis_spark.sinks.spark_file import DataFrameSink
+
+    class Failing(DataFrameSink):
+        name = "broken"
+
+        def write_df(self, batch, ctx, metadata):
+            raise IOError("object store down")
+
+    rig.state.set_last_version("e1", "obj", 4)
+    p = rig.pipeline(df_sinks=[Failing()])
+    [r] = p.run_cycle()
+    assert r.mode == "sync" and r.exported_rows == 6 and r.new_watermark == 10
+    assert [f.sink_name for f in r.failures] == ["broken"]
+    [row] = rig.dlq.rows()
+    manifest = json.loads(row["data"])
+    assert (manifest["from_version"], manifest["to_version"]) == (4, 10)
+    assert manifest["rows"] == 6
+    assert rig.state.get_last_version("e1", "obj") == 10

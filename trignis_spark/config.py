@@ -87,6 +87,12 @@ def validate_environment(env: EnvironmentConfig) -> tuple[list[str], list[str]]:
             )
         if obj.source_sql is None and not obj.table_name:
             errors.append(f"object '{obj.name}': table_name or source_sql required")
+    if env.max_records_per_batch < 1:
+        # the poll-level chunker would otherwise send one envelope per row
+        errors.append(
+            f"environment '{env.name}': max_records_per_batch must be at "
+            f"least 1, got {env.max_records_per_batch}"
+        )
     if env.polling_interval_seconds < 5:
         warnings.append(
             f"environment '{env.name}': polling interval "

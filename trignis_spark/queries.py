@@ -972,40 +972,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk.withColumn("rank", F.col("rank").cast("long"))
 
 
-@register(
-    "ann_cosine_allpairs",
-    f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (SELECT vec_id, v, {_DNORM2.format(a='v')} AS n2 FROM e),
-    q AS (SELECT vec_id AS query_id, v AS qv, n2 AS qn2 FROM n),
-    s AS (
-      SELECT q.query_id, n.vec_id AS neighbor_id,
-             {_DDOT.format(a='q.qv', b='n.v')} / sqrt(q.qn2 * n.n2) AS cos
-      FROM q, n WHERE n.vec_id <> q.query_id),
-    r AS (
-      SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos DESC, neighbor_id) AS rank
-      FROM s)
-    SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
-    """,
-)
-def ann_cosine_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-10 for EVERY vector — the full ground-truth
-    neighbor table (the recall baseline the approximate operators are
-    scored against), and the bench's core-scaling probe (round 12):
-    N² scoring work over a corpus spread to the session's
-    shuffle-partition count makes wall time track the configured core
-    count at fixture scale, where every other headline query is
-    scheduling/overhead-bound (measured 2.2 s at local[32] vs 4.6 s at
-    local[8] at sf0.1 — the one headline row whose low-core/high-core
-    ratio reflects parallelism rather than noise)."""
-    topk = sim.cosine_topk(
-        load(spark, sf_dir, "embeddings"), "true", spread=True
-    )
-    return topk.withColumn("rank", F.col("rank").cast("long"))
-
-
 # --------------------------------------------------------------------------
 # Multimodal: binary payload + Arrow-batched decode/feature extraction
 # --------------------------------------------------------------------------
@@ -2624,8 +2590,44 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Registered last: completes the TPC-H shape coverage (Q2, Q7-Q11, Q13,
-# Q15-Q17, Q19-Q22) and the extended analytics set (sessionization,
-# pivot, set ops, repetition signals) on top of the shapes above.
+# Registered after the rows above: completes the TPC-H shape coverage
+# (Q2, Q7-Q11, Q13, Q15-Q17, Q19-Q22) and the extended analytics set
+# (sessionization, pivot, set ops, repetition signals).
 from trignis_spark import queries_ext  # noqa: E402,F401
 from trignis_spark import queries_tpch  # noqa: E402,F401
+
+
+# Registered last: new registry rows go at the end, so the order of the
+# rows above stays fixed.
+@register(
+    "ann_cosine_allpairs",
+    f"""
+    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    n AS (SELECT vec_id, v, {_DNORM2.format(a='v')} AS n2 FROM e),
+    q AS (SELECT vec_id AS query_id, v AS qv, n2 AS qn2 FROM n),
+    s AS (
+      SELECT q.query_id, n.vec_id AS neighbor_id,
+             {_DDOT.format(a='q.qv', b='n.v')} / sqrt(q.qn2 * n.n2) AS cos
+      FROM q, n WHERE n.vec_id <> q.query_id),
+    r AS (
+      SELECT query_id, neighbor_id,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY cos DESC, neighbor_id) AS rank
+      FROM s)
+    SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
+    """,
+)
+def ann_cosine_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-10 for EVERY vector — the full ground-truth
+    neighbor table (the recall baseline the approximate operators are
+    scored against), and the bench's core-scaling probe (round 12):
+    N² scoring work over a corpus spread to the session's
+    shuffle-partition count makes wall time track the configured core
+    count at fixture scale, where every other headline query is
+    scheduling/overhead-bound (measured 2.2 s at local[32] vs 4.6 s at
+    local[8] at sf0.1 — the one headline row whose low-core/high-core
+    ratio reflects parallelism rather than noise)."""
+    topk = sim.cosine_topk(
+        load(spark, sf_dir, "embeddings"), "true", spread=True
+    )
+    return topk.withColumn("rank", F.col("rank").cast("long"))

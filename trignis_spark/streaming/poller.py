@@ -23,14 +23,17 @@ Two export paths:
   (``iter_envelope_chunks``), each chunk one JSON envelope — the
   reference's unit of export, with the batch-split cap applied at the
   poll level so the driver's residency is bounded regardless of batch
-  size; Full syncs are routed to the distributed path automatically
-  when one is configured;
+  size. That iteration is the poll's one Spark action: the watermark is
+  the last exported row's version and the count the sum of the chunk
+  lengths; a batch yielding no chunk is an empty poll, no state written.
+  Full syncs route to the distributed path when one is configured;
 - **distributed path** (``df_sinks``): the batch never leaves the
   executors — ``DataFrameSink``s write it partition-parallel and only
   the (watermark, count) aggregate reaches the driver; failures
   dead-letter a replayable version-range *manifest* instead of rows
   (``sinks/spark_file.py``). Use this for 100 TB initial syncs and
-  large backfills.
+  large backfills. Only this path runs the aggregate: the manifest and
+  the sidecar metadata need both values before any write.
 """
 
 from __future__ import annotations
@@ -124,6 +127,64 @@ def export_fanout(
         except Exception as e:  # noqa: BLE001 — every sink failure is recorded
             retryable = getattr(e, "retryable", True)
             failures.append(SinkFailure(sink.name, str(e), retryable))
+    return failures
+
+
+def dead_letter(dlq: DeadLetterStore, ctx: ExportContext, sink_name: str,
+                data: str, error: str) -> None:
+    dlq.save(
+        source_key=f"{ctx.environment}/{ctx.object_name}/{sink_name}",
+        tracking_object_name=ctx.object_name, environment_name=ctx.environment,
+        database_name=ctx.database, data=data, error_message=error,
+    )
+
+
+def export_envelopes(
+    ordered: DataFrame, max_records: int, sync_type: str, reason_code: int,
+    sinks: list[Sink], ctx: ExportContext, retry: RetryPolicy,
+    dlq: DeadLetterStore, skip_dlq: frozenset[str] = frozenset(),
+) -> tuple[int, int | None, list[SinkFailure]]:
+    """The envelope path, one Spark action: each version-ordered chunk is
+    one envelope (its own monotone max version) fanned out to every sink;
+    a failed delivery dead-letters that chunk's payload, so replay
+    granularity matches what was sent. Returns ``(exported,
+    last_version, failures)`` — ``last_version`` is the last exported
+    row's version (``None`` if there was no row), which the caller
+    commits as the watermark only now, after every dead letter is
+    durable (DLQ before watermark: a crash between the two re-fetches).
+    Sinks in ``skip_dlq`` already dead-lettered a manifest."""
+    exported, last_version = 0, None
+    failures: list[SinkFailure] = []
+    for chunk in iter_envelope_chunks(ordered, max_records):
+        last_version = chunk[-1][cf.VERSION]
+        payload = envelope_json(chunk, last_version, sync_type, reason_code)
+        chunk_failures = export_fanout(payload, sinks, ctx, retry)
+        for fail in chunk_failures:
+            if fail.sink_name not in skip_dlq:
+                dead_letter(dlq, ctx, fail.sink_name, payload, fail.error)
+        failures += chunk_failures
+        exported += len(chunk)
+    return exported, last_version, failures
+
+
+def export_distributed(
+    ordered: DataFrame, df_sinks: list[DataFrameSink], ctx: ExportContext,
+    dlq: DeadLetterStore, from_version: int, to_version: int, rows: int,
+    sync_type: str, reason_code: int = 0,
+) -> list[SinkFailure]:
+    """The distributed path: every ``DataFrameSink`` writes the batch
+    executor-side; a failure dead-letters the replayable version-range
+    manifest, not the rows — replay re-scans the range from the source."""
+    metadata = {"Sync": {"Version": to_version, "Type": sync_type,
+                         "ReasonCode": reason_code}}
+    manifest = batch_manifest(ctx, from_version, to_version, rows)
+    failures: list[SinkFailure] = []
+    for dfs in df_sinks:
+        try:
+            dfs.write_df(ordered, ctx, metadata)
+        except Exception as e:  # noqa: BLE001
+            failures.append(SinkFailure(dfs.name, str(e), True))
+            dead_letter(dlq, ctx, dfs.name, manifest, str(e))
     return failures
 
 
@@ -262,92 +323,53 @@ class PollPipeline:
         default_version: int,
         reason_code: int = 0,
     ) -> CycleResult:
-        ctx = ExportContext(
-            environment=self.env.name,
-            database=obj.database,
-            object_name=obj.name,
-            key=f"{self.env.name}/{obj.name}",
-        )
+        ctx = ExportContext(environment=self.env.name, database=obj.database,
+                            object_name=obj.name, key=f"{self.env.name}/{obj.name}")
         ordered = batch.orderBy(cf.VERSION)
+        mode = "full" if sync_type == "Full" else "sync"
         failures: list[SinkFailure] = []
 
-        # watermark + size computed executor-side — the driver never sees
-        # the rows themselves until the bounded chunk iteration below
-        agg = batch.agg(
-            F.coalesce(F.max(cf.VERSION), F.lit(default_version)).alias("wm"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        new_wm, n_rows = agg["wm"], agg["n"]
-        if n_rows == 0:
-            return CycleResult(obj.name, "empty", 0, default_version)
-
         if self.df_sinks:
-            # distributed path: batch stays on executors; only the
-            # (watermark, count) aggregate touches the driver
-            metadata = {
-                "Sync": {"Version": new_wm, "Type": sync_type,
-                         "ReasonCode": reason_code}
-            }
-            manifest = batch_manifest(ctx, default_version, new_wm, n_rows)
-            for dfs in self.df_sinks:
-                try:
-                    dfs.write_df(ordered, ctx, metadata)
-                except Exception as e:  # noqa: BLE001
-                    failures.append(SinkFailure(dfs.name, str(e), True))
-                    # dead-letter the replayable MANIFEST, not the rows —
-                    # replay re-scans the version range from the source
-                    self.dlq.save(
-                        source_key=f"{self.env.name}/{obj.name}/{dfs.name}",
-                        tracking_object_name=obj.name,
-                        environment_name=self.env.name,
-                        database_name=obj.database,
-                        data=manifest,
-                        error_message=str(e),
-                    )
+            # distributed path: the manifest and the sidecar metadata need
+            # (watermark, count) before any write, so only this path runs
+            # the aggregate — executor-side; the rows stay there
+            agg = batch.agg(
+                F.coalesce(F.max(cf.VERSION), F.lit(default_version)).alias("wm"),
+                F.count(F.lit(1)).alias("n"),
+            ).first()
+            new_wm, n_rows = agg["wm"], agg["n"]
+            if n_rows == 0:
+                return CycleResult(obj.name, "empty", 0, default_version)
+            failures = export_distributed(
+                ordered, self.df_sinks, ctx, self.dlq, default_version,
+                new_wm, n_rows, sync_type, reason_code,
+            )
             if not self.sinks or sync_type == "Full":
                 # Full syncs route to the distributed path automatically:
                 # a snapshot through a collect-based envelope sink is the
                 # one shape that grows with table size, not change rate
-                if self.sinks and sync_type == "Full":
+                if self.sinks:
                     log.info(
                         "%s/%s: full sync routed to distributed sinks; "
                         "%d envelope sink(s) skipped",
                         self.env.name, obj.name, len(self.sinks),
                     )
                 self.state.set_last_version(self.env.name, obj.name, new_wm)
-                return CycleResult(
-                    obj.name,
-                    sync_type.lower() if sync_type == "Full" else "sync",
-                    n_rows, new_wm, failures,
-                )
+                return CycleResult(obj.name, mode, n_rows, new_wm, failures)
 
-        # envelope path: bounded chunks — at most max_records_per_batch
-        # rows on the driver at a time, each chunk its own envelope with
-        # its own (monotone) chunk-max version; DLQ rows are per-chunk so
-        # replay granularity matches what was actually sent
-        failed_df_sinks = {d.name for d in self.df_sinks}
-        exported = 0
-        for chunk in iter_envelope_chunks(
-            ordered, self.env.max_records_per_batch
-        ):
-            chunk_wm = chunk[-1][cf.VERSION]
-            payload = envelope_json(chunk, chunk_wm, sync_type, reason_code)
-            chunk_failures = export_fanout(payload, self.sinks, ctx, self.retry)
-            # write-ordering: dead letters BEFORE the watermark advance, so
-            # a crash between the two re-fetches rather than losing payload
-            for fail in chunk_failures:
-                if fail.sink_name in failed_df_sinks:
-                    continue  # manifest already dead-lettered above
-                self.dlq.save(
-                    source_key=f"{self.env.name}/{obj.name}/{fail.sink_name}",
-                    tracking_object_name=obj.name,
-                    environment_name=self.env.name,
-                    database_name=obj.database,
-                    data=payload,
-                    error_message=fail.error,
-                )
-            failures += chunk_failures
-            exported += len(chunk)
+        # envelope path: the ordered chunk iteration is the only Spark
+        # action — at most max_records_per_batch rows on the driver at a
+        # time, and the watermark is the version of the last row exported
+        # (the batch max), not a separate earlier query's answer
+        exported, last_version, sent_failures = export_envelopes(
+            ordered, self.env.max_records_per_batch, sync_type, reason_code,
+            self.sinks, ctx, self.retry, self.dlq,
+            skip_dlq=frozenset(d.name for d in self.df_sinks),
+        )
+        if not self.df_sinks:
+            if last_version is None:
+                return CycleResult(obj.name, "empty", 0, default_version)
+            new_wm = last_version
         self.state.set_last_version(self.env.name, obj.name, new_wm)
-        return CycleResult(obj.name, sync_type.lower() if sync_type == "Full" else "sync",
-                           exported, new_wm, failures)
+        return CycleResult(obj.name, mode, exported, new_wm,
+                           failures + sent_failures)

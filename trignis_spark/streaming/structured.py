@@ -27,11 +27,7 @@ from trignis_spark.deadletter import DeadLetterStore
 from trignis_spark.operators import changefeed as cf
 from trignis_spark.sinks.base import ExportContext, RetryPolicy, Sink
 from trignis_spark.state import StateStore
-from trignis_spark.streaming.poller import (
-    envelope_json,
-    export_fanout,
-    iter_envelope_chunks,
-)
+from trignis_spark.streaming.poller import export_distributed, export_envelopes
 
 log = logging.getLogger("trignis_spark.structured")
 
@@ -45,63 +41,43 @@ def make_export_batch_fn(
     retry: RetryPolicy | None = None,
     df_sinks=None,  # list[DataFrameSink] — executor-parallel destinations
 ):
-    """The foreachBatch body: distributed DataFrame sinks first (the
-    batch never leaves the executors — e.g. a MirrorTableSink turns the
-    stream into a continuously-maintained materialized view), then the
-    chunked envelope fan-out, DLQ failures, watermark mirror."""
+    """The foreachBatch body, on the poller's two export routines:
+    distributed DataFrame sinks first (e.g. a MirrorTableSink turns the
+    stream into a continuously-maintained materialized view; only they
+    need the (watermark, count) aggregate), then the chunked envelope
+    fan-out with its dead letters, then the watermark mirror — the
+    epoch max. An epoch without rows writes nothing."""
     retry = retry or RetryPolicy(
         attempts=env.retry_count, delay_seconds=env.retry_delay_seconds
     )
     df_sinks = df_sinks or []
+    df_names = frozenset(d.name for d in df_sinks)
 
     def export_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        agg = batch_df.agg(
-            F.coalesce(F.max(cf.VERSION), F.lit(0)).alias("wm"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        if agg["n"] == 0:
-            return
-        new_wm = agg["wm"]
         ctx = ExportContext(
             environment=env.name,
             database=obj.database,
             object_name=obj.name,
             key=f"{env.name}/{obj.name}/epoch-{epoch_id}",
         )
-        if df_sinks:
-            from trignis_spark.sinks.spark_file import batch_manifest
-
-            metadata = {"Sync": {"Version": new_wm, "Type": "Diff",
-                                 "ReasonCode": 0}}
-            manifest = batch_manifest(ctx, 0, new_wm, agg["n"])
-            for dfs in df_sinks:
-                try:
-                    dfs.write_df(batch_df.orderBy(cf.VERSION), ctx, metadata)
-                except Exception as e:  # noqa: BLE001
-                    dlq.save(
-                        source_key=f"{env.name}/{obj.name}/{dfs.name}",
-                        tracking_object_name=obj.name,
-                        environment_name=env.name,
-                        database_name=obj.database,
-                        data=manifest,
-                        error_message=str(e),
-                    )
-        # bounded chunks, same as the poller's envelope path — the epoch
-        # is never materialized whole on the driver
         ordered = batch_df.orderBy(cf.VERSION)
-        for chunk in iter_envelope_chunks(ordered, env.max_records_per_batch):
-            payload = envelope_json(chunk, chunk[-1][cf.VERSION], "Diff")
-            failures = export_fanout(payload, sinks, ctx, retry)
-            for fail in failures:  # DLQ before epoch commit
-                dlq.save(
-                    source_key=f"{env.name}/{obj.name}/{fail.sink_name}",
-                    tracking_object_name=obj.name,
-                    environment_name=env.name,
-                    database_name=obj.database,
-                    data=payload,
-                    error_message=fail.error,
-                )
-        state.set_last_version(env.name, obj.name, new_wm)
+        new_wm = None
+        if df_sinks:
+            agg = batch_df.agg(
+                F.max(cf.VERSION).alias("wm"), F.count(F.lit(1)).alias("n")
+            ).first()
+            if agg["n"] == 0:
+                return
+            new_wm = agg["wm"]
+            export_distributed(ordered, df_sinks, ctx, dlq, 0, new_wm, agg["n"], "Diff")
+        if sinks or new_wm is None:
+            _, last_version, _ = export_envelopes(
+                ordered, env.max_records_per_batch, "Diff", 0, sinks, ctx,
+                retry, dlq, skip_dlq=df_names,
+            )
+            new_wm = last_version if new_wm is None else new_wm
+        if new_wm is not None:
+            state.set_last_version(env.name, obj.name, new_wm)
 
     return export_batch
 
